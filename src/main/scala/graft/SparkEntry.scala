@@ -1760,7 +1760,7 @@ object SparkEntry {
     // truncated to 269 — the full five-column sink row. The fixture is
     // parquet, so the path is synthesized (as in scalar_funcs); the
     // composition under test is basename_backwards∘truncate over the
-    // word-stats shape, carried through the dedup shuffle.
+    // word-stats shape, carried through the row-local kernel.
     "wordstats_files" -> ((s, dir) => {
       val path = concat(
         lit("data/corpus/"), col("source"), lit("/"), col("lang"),

@@ -950,7 +950,7 @@ object NearDup {
     * grams travel the shuffles as a 60-bit sha256-slice key, never the
     * gram text (3-gram text averages ~20 bytes; the key is 8). The
     * duplicated-gram set = the [[shingles]] hash-agg (distinct
-    * (doc, gram) → per-gram doc counts — the wordstats shuffle) with
+    * (doc, gram) → per-gram doc counts — the keepFirst-shaped shuffle) with
     * df ≥ minDocs; flagging is a semi-equijoin of positional grams
     * against that set (AQE broadcasts it when the duplicated
     * vocabulary is small); runs are one per-doc window (gaps-and-
@@ -1046,7 +1046,7 @@ object NearDup {
     * Scale shape: tokens and grams are narrow generates; grams travel
     * every shuffle as the 60-bit sha256-slice key, never text. The
     * duplicated-gram table (key → canonical id) is ONE hash-agg over
-    * distinct (doc, gram) — the wordstats shuffle — and is Zipf-small
+    * distinct (doc, gram) — the keepFirst-shaped shuffle — and is Zipf-small
     * (duplicated vocabulary ≪ corpus), so AQE broadcasts the flagging
     * join. Covered positions expand n-fold from FLAGGED occurrences
     * only, dedup by (doc, pos), anti-join against the token table on

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.expressions.FirstWords
 import graft.functions.Scalars
+import org.apache.spark.sql.graft.ColumnAdapter
 
 /** The reference's canonical query (SURVEY §3.4, example/main.py:59-137):
   * for each document, one row per FIRST occurrence of each distinct
@@ -14,37 +16,40 @@ import graft.functions.Scalars
   *   word_truncated pre-truncation length > 255
   *   words_count    total (non-blank) tokens in the document
   *
-  * Composition: Tokenize.splitTokens → Dedup.keepFirst → AttrsTransform-
-  * style derivations, with words_count computed as a SHUFFLE-FREE scalar
-  * expression on the un-exploded row (FoldGroup.tokenCountExpr) instead of
-  * the window-count the naive translation would use. The reference reads
-  * and tokenizes every file TWICE (once to count, once to dedup —
-  * SURVEY §3.3); this plan scans once and shuffles once (the dedup
-  * hash-aggregation), which is the 100 TB-shaped version: one wide
-  * exchange keyed by (doc, word_norm), partial min_by map-side.
+  * Plan: scan → one projection of the row-local kernel
+  * [[graft.expressions.FirstWords]] (token count + first form of each
+  * `Scalars.wordNorm` key, in one pass over the text) → explode → the
+  * derivation projection. A document is one row, so its first-seen
+  * dedup needs no exchange: the plan is narrow end to end. The
+  * reference reads and tokenizes every file TWICE (once to count, once
+  * to dedup — SURVEY §3.3); this reads each document once.
+  *
+  * The rows equal `Tokenize.splitTokens` → `Dedup.keepFirst` keyed by
+  * (doc, words_count, carryCols, `lower(trim(word))`) with
+  * `FoldGroup.tokenCountExpr` as the count — ExpressionEquivalenceSpec
+  * pins that composition on adversarial text. It assumes one row per
+  * `idCol` value, which every document source gives; rows that share an
+  * id are deduplicated separately, not together.
   */
 object WordStats {
 
   /** `carryCols`: additional PER-DOCUMENT columns of `docs` to carry
-    * through to the output unchanged (they ride the dedup shuffle as
-    * extra bag keys — functionally dependent on the doc id, so the
-    * grouping is unaffected). The reference's canonical sink rows carry
-    * the source `file` this way (example/main.py:127,158-162). */
+    * through to the output unchanged. The reference's canonical sink
+    * rows carry the source `file` this way (example/main.py:127,158-162). */
   def apply(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
       carryCols: Seq[String] = Nil): DataFrame = {
-    val base = docs
-      .select((idCol +: textCol +: carryCols).map(col): _*)
-      .withColumn("words_count", FoldGroup.tokenCountExpr(col(textCol)))
-
-    val tokens = Tokenize.splitTokens(inputCol = textCol)(base)
-
-    val firsts = Dedup.keepFirst(
-      bagKeys = idCol +: "words_count" +: carryCols,
-      valueCol = "word",
-      orderCol = "pos")(tokens)
+    val kept = idCol +: carryCols
+    val fw = graft.core.Cols.fresh("__fw", kept)
+    // the kernel gets its own column, so explode and words_count read
+    // one evaluation of it instead of CollapseProject inlining it twice
+    val kernel = docs.select(kept.map(col) :+ ColumnAdapter.column(
+      FirstWords(ColumnAdapter.expression(col(textCol)))).as(fw): _*)
+    val firsts = kernel.select(kept.map(col) ++ Seq(
+      col(fw).getField("words_count").as("words_count"),
+      explode(col(fw).getField("words")).as("word")): _*)
 
     firsts.select(
       col(idCol) +:
@@ -72,13 +77,13 @@ object WordStats {
     * entry pins it against the unchanged DuckDB wordstats oracle).
     *
     * Plan shape: one narrow tokenize stage, then TWO aggregations
-    * instead of [[apply]]'s one — the per-file token total can no
-    * longer be a shuffle-free scalar on the un-exploded row (the row
-    * is a line, not the document), so it is its own `groupBy(id)`
-    * count joined back onto the dedup output (one row per file — the
-    * small side of that join). `orderCol` must totally order a file's
-    * lines (byte offsets do); ties across lines would make
-    * first-occurrence nondeterministic. */
+    * where [[apply]] has none — a line is not a document, so neither
+    * the first-seen dedup nor the per-file token total is row-local:
+    * the dedup is `Dedup.keepFirst`'s hash aggregation and the total is
+    * its own `groupBy(id)` count joined back onto the dedup output (one
+    * row per file — the small side of that join). `orderCol` must
+    * totally order a file's lines (byte offsets do); ties across lines
+    * would make first-occurrence nondeterministic. */
   def fromLines(
       lines: DataFrame,
       idCol: String = "file_path",

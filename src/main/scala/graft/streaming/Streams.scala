@@ -155,14 +155,14 @@ object Streams {
     * appending duplicates (a blind append would make the pipeline only
     * at-least-once on retry).
     *
-    * The aggregation runs inside `foreachBatch`: WordStats groups by
-    * (file, normalized word), and `wholetext` makes each file ONE
-    * source row, so every group is fully contained in whichever
-    * micro-batch carries its file — per-batch aggregation + parquet
-    * append is then exactly the batch result, no cross-batch state
-    * needed. (A line-granular source would need watermarked streaming
-    * aggregation instead; file-granular semantics make the cheap shape
-    * correct.)
+    * The word stats run inside `foreachBatch`: `wholetext` makes each
+    * file ONE source row, and WordStats derives a file's rows from
+    * that row alone (its first-seen dedup is row-local), so whichever
+    * micro-batch carries a file produces all of its rows — per-batch
+    * stats + parquet append is then exactly the batch result, no
+    * cross-batch state needed. (A line-granular source would need
+    * watermarked streaming aggregation instead; file-granular
+    * semantics make the cheap shape correct.)
     *
     * Returns the started query; callers decide whether to await. */
   def ingestWordStats(

@@ -1,9 +1,12 @@
 package graft
 
+import com.ibm.icu.lang.UCharacter
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.expressions.{DistinctShingles, DotProductLong}
+import graft.functions.Scalars
+import graft.operators.{Dedup, FoldGroup, Tokenize, WordStats}
 import org.apache.spark.sql.graft.ColumnAdapter
 
 /** Randomized (fixed-seed) equivalence harness for the custom codegen
@@ -63,6 +66,106 @@ class ExpressionEquivalenceSpec extends SparkSpecBase {
       assert(df.filter(col("nat") =!= col("hof")).count() === 0,
         s"mismatch at n=$n")
     }
+  }
+
+  /** WordStats as the composed plan its FirstWords kernel replaced:
+    * count by a second split, posexplode, then the first-seen hash
+    * aggregation keyed by (doc, words_count, carry, lower(trim(word))). */
+  private def wordStatsComposed(docs: org.apache.spark.sql.DataFrame) = {
+    val base = docs.select("doc_id", "text", "file")
+      .withColumn("words_count", FoldGroup.tokenCountExpr(col("text")))
+    Dedup.keepFirst(Seq("doc_id", "words_count", "file"), "word", "pos")(
+      Tokenize.splitTokens(inputCol = "text")(base))
+      .select(col("doc_id"),
+        Scalars.truncate254(col("word")).as("word"),
+        length(Scalars.removeDiac(col("word"))).cast("long").as("word_len"),
+        Scalars.lenGt255(col("word")).as("word_truncated"),
+        col("words_count"), col("file"))
+  }
+
+  test("FirstWords: WordStats equals the split + keepFirst composition on adversarial text") {
+    import spark.implicits._
+    import java.nio.charset.StandardCharsets.UTF_8
+    val rnd = new scala.util.Random(20261019L)
+    def letters(n: Int, alphabet: String) =
+      Iterator.fill(n)(alphabet(rnd.nextInt(alphabet.length))).mkString
+    // capitals ICU lowers differently from the JDK (its Unicode tables
+    // are newer), so the ICU conf changes some dedup keys
+    val icuOnly = (0x80 to 0x1FFFF).iterator.map(cp => new String(Character.toChars(cp)))
+      .filter(c => UCharacter.toLowerCase(c) != c.toLowerCase).take(3).toSeq
+    // around the 254/255 truncation edges: case variants of one long
+    // word, multi-byte letters (chars != bytes), Arabic with and
+    // without diacritics (word_len strips them)
+    val long = Seq(254, 255, 256, 300, 317).flatMap { n =>
+      val w = letters(n, "abcdefghij")
+      Seq(w, w.toUpperCase, w.capitalize, letters(n - 1, "éßΣ") + "İ",
+        letters(n, "كتبمحد"), letters(n, "كَتُبِ"))
+    }
+    val words: Vector[String] = Vector(
+      "Apple", "apple", "APPLE", "aPPle",
+      "İstanbul", "istanbul", "ISTANBUL", "ıstanbul", "İ", "i", "I", "ı",
+      "Σ", "σ", "ς", "ΣΟΦΟΣ", "σοφος", "σοφοσ", "ß", "SS", "ss", "ẞ", "straße", "STRASSE",
+      "ǅ", "ǆ", "Ǆ", "é", "É", "e\u0301", "E\u0301", "\uD801\uDC00", "\uD801\uDC28", "😀",
+      "كَتَبَ", "كتب", "كُتُب", "مُحَمَّدٌ", "محمد",
+      // Unicode spaces outside \s stay inside tokens
+      "a\u00A0b", "\u00A0", "\u3000", "x\u3000y", "\u2028", "\u0085z",
+      "x", "7", "-", "'") ++ long ++ icuOnly ++ icuOnly.map(c => UCharacter.toLowerCase(c))
+    val malformed: Vector[Array[Byte]] = Vector(
+      Seq(0xC0, 0xAF), Seq(0xED, 0xA0, 0x80), Seq(0xF4, 0x90, 0x80, 0x80),
+      Seq(0xE2, 0x82), Seq(0x80), Seq(0xFF), Seq(0xF5, 0x41))
+      .map(_.map(_.toByte).toArray)
+    val spaces = Array[Byte](32, 9, 10, 11, 12, 13) // Java's \s: space \t \n \x0B \f \r
+    def run(min: Int) = Array.fill(min + rnd.nextInt(4))(spaces(rnd.nextInt(spaces.length)))
+    def word() = words(rnd.nextInt(words.size)).getBytes(UTF_8)
+    def token(): Array[Byte] = rnd.nextInt(30) match {
+      case 0 => malformed(rnd.nextInt(malformed.size))
+      case 1 => word() ++ malformed(rnd.nextInt(malformed.size)) ++ word()
+      case _ => word()
+    }
+    def doc(): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream
+      if (rnd.nextInt(5) == 0) out.write("\uFEFF".getBytes(UTF_8))
+      out.write(run(0))
+      for (i <- 0 until rnd.nextInt(40)) {
+        if (i > 0) out.write(run(1))
+        out.write(token())
+      }
+      out.write(run(0))
+      out.toByteArray
+    }
+    val rows = (0 until 300).map { i =>
+      val raw = i match {
+        case 0 => null
+        case 1 => Array.emptyByteArray
+        case 2 => run(1)
+        case _ => doc()
+      }
+      (if (i == 3) None else Some(i.toLong),
+        if (i % 7 == 0) None else Some(s"f${i % 11}"), raw)
+    }
+    // binary → string keeps the bytes as they are, malformed or not
+    val docs = rows.toDF("doc_id", "file", "raw")
+      .select(col("doc_id"), col("file"), col("raw").cast("string").as("text"))
+    assert(docs.filter(!expr("is_valid_utf8(text)")).count() > 0)
+    val key = "spark.sql.icu.caseMappings.enabled"
+    val old = spark.conf.get(key)
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    try {
+      val bags = for (icu <- Seq(true, false)) yield {
+        spark.conf.set(key, icu.toString)
+        val kernel = WordStats(docs, carryCols = Seq("file"))
+        val composed = wordStatsComposed(docs)
+        assert(kernel.schema.map(f => f.name -> f.dataType) ===
+          composed.schema.map(f => f.name -> f.dataType))
+        val got = bag(kernel)
+        assert(got.values.sum > 2000, s"icu=$icu")
+        assert(got === bag(composed), s"icu=$icu")
+        got
+      }
+      if (icuOnly.nonEmpty)
+        assert(bags(0) !== bags(1), s"the ICU conf must change the keys of $icuOnly")
+    } finally spark.conf.set(key, old)
   }
 
   // ---- packed-codebook argmin/argmax loops (the r9 soak-OOM fixes) ----

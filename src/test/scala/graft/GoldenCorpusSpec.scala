@@ -11,16 +11,16 @@ import graft.operators.{Tokenize, WordStats}
 import graft.sinks.{ConditionalSink, CsvSink, FilteredSink, ParquetSink, RepartitionedSink}
 import graft.sources.{ChunkedTextSource, FileLinesSource, FilesListSource, WholeTextSource}
 
-/** End-to-end golden test over the reference's own corpus
-  * (/root/reference/example/sample_data/books/ — Project Gutenberg
-  * .txt files), asserting the A.3 invariants from FIXTURES.md, i.e.
+/** End-to-end golden test over the reference's own corpus (Project
+  * Gutenberg .txt files, or its seeded stand-in — see [[TestCorpus]]),
+  * asserting the A.3 invariants from FIXTURES.md, i.e.
   * the audit SQL the reference documents at example/readme.md:41-69.
   * This is the run a reference user would do first: point the engine
   * at a directory of text files, get the word-stats table out.
   */
 class GoldenCorpusSpec extends SparkSpecBase {
 
-  private val booksDir = "/root/reference/example/sample_data/books"
+  private val booksDir = TestCorpus.booksDir
 
   private lazy val nTxtFiles: Long = {
     val d = new java.io.File(booksDir)
@@ -48,7 +48,7 @@ class GoldenCorpusSpec extends SparkSpecBase {
   test("sources: multi-root listing walks every root (FoldersFilesListExtractor parity)") {
     // The reference's FoldersFilesListExtractor chains one walk per root
     // dir (extractors/files.py:28-49); here multiple roots are one load.
-    val oneBookDir = "/root/reference/example/sample_data/one_book"
+    val oneBookDir = TestCorpus.oneBookDir
     val nOneBook = new java.io.File(oneBookDir)
       .listFiles().count(f => f.isFile && f.getName.endsWith(".txt")).toLong
     assert(nOneBook > 0)

@@ -15,7 +15,7 @@ import graft.sources.BinaryFilesSource
   */
 class MultimodalSpec extends SparkSpecBase {
 
-  private val booksDir = "/root/reference/example/sample_data/books"
+  private val booksDir = TestCorpus.booksDir
 
   private lazy val files = BinaryFilesSource(Seq(booksDir), glob = "*.txt")
     .load(spark).cache()

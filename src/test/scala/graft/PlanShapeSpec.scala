@@ -31,10 +31,15 @@ class PlanShapeSpec extends SparkSpecBase {
       "scan reads columns the query never uses:\n" + p.take(2000))
   }
 
-  test("wordstats is one scan + one hash-partition exchange") {
+  test("wordstats is one scan + one first_words kernel, zero exchanges") {
+    // a document is one row: its first-seen dedup is row-local, so the
+    // canonical query must not shuffle, and the kernel runs once per
+    // document (not copied into both explode and words_count)
     val p = plan("wordstats")
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
-    assert(exchanges === 1, s"expected 1 shuffle, got $exchanges:\n${p.take(3000)}")
+    val exchanges = "Exchange".r.findAllIn(p).size
+    assert(exchanges === 0, s"expected no shuffle, got $exchanges:\n${p.take(3000)}")
+    val kernels = "first_words\\(".r.findAllIn(p).size
+    assert(kernels === 1, s"expected one kernel call, got $kernels:\n${p.take(3000)}")
   }
 
   test("q5 broadcasts the three dims and shuffles the fact-fact joins") {

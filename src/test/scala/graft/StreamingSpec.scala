@@ -317,7 +317,7 @@ class StreamingSpec extends SparkSpecBase {
     // streaming pipeline. Stage the corpus in a temp dir so the
     // incremental second run can add a file.
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val booksDir = Paths.get("/root/reference/example/sample_data/books")
+    val booksDir = Paths.get(TestCorpus.booksDir)
     val work = Files.createTempDirectory("graft_ingest")
     val (inDir, outDir, ckpt) =
       (work.resolve("in"), work.resolve("out"), work.resolve("ckpt"))
