@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Lineage truncation for iterative operators, with a RELIABILITY dial.
   *
@@ -16,9 +18,10 @@ import org.apache.spark.sql.DataFrame
   * pass `checkpointDir = Some(dir)` to any iterative operator and every
   * in-loop truncation goes through the reliable path.
   *
-  * Both paths are EAGER (the round materializes before the driver's
-  * convergence probe runs), so the two modes produce bit-identical
-  * results — asserted by CheckpointDialSpec.
+  * DataFrame loops truncate eagerly by default; the RDD form is lazy
+  * and the round's own action materializes it. Either way a round is
+  * materialized before the driver reads it, so the two modes produce
+  * bit-identical results — asserted by CheckpointDialSpec.
   */
 object IterCheckpoint {
 
@@ -35,10 +38,10 @@ object IterCheckpoint {
     * else `localCheckpoint()`.
     *
     * `eager = true` (the default) materializes NOW — required inside
-    * iteration loops, where the driver's convergence probe must see
-    * the round's result. `eager = false` defers materialization to the
-    * first action: the right mode for up-front INPUT truncation (e.g.
-    * the graph operators' edge lists), where an eager call would run a
+    * DataFrame iteration loops, where the driver must see the round's
+    * result. `eager = false` defers materialization to the first
+    * action: the right mode for up-front INPUT truncation (e.g. the
+    * graph operators' edge lists), where an eager call would run a
     * full Spark job at DataFrame-CONSTRUCTION time — surprising a
     * caller that only wanted `explain()`. For `localCheckpoint` the
     * blocks live until the wrapping RDD is garbage collected
@@ -53,11 +56,25 @@ object IterCheckpoint {
       dir: Option[String],
       eager: Boolean = true): DataFrame = dir match {
     case Some(d) =>
-      val sc = df.sparkSession.sparkContext
-      if (installed.put(sc, d) != d) sc.setCheckpointDir(d)
+      install(df.sparkSession.sparkContext, d)
       df.checkpoint(eager)
     case None => df.localCheckpoint(eager)
   }
+
+  /** The RDD form of [[truncate]], LAZY: the caller's next action on
+    * `rdd` materializes it. The reliable path persists first, so the
+    * file write that follows the action reads blocks, not the round. */
+  def truncate[T](rdd: RDD[T], dir: Option[String]): RDD[T] = dir match {
+    case Some(d) =>
+      install(rdd.sparkContext, d)
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.checkpoint()
+      rdd
+    case None => rdd.localCheckpoint()
+  }
+
+  private def install(sc: org.apache.spark.SparkContext, dir: String): Unit =
+    if (installed.put(sc, dir) != dir) sc.setCheckpointDir(dir)
 
   /** Release the executor blocks behind a DataFrame previously returned
     * by [[truncate]], once the caller KNOWS the data is dead (a newer

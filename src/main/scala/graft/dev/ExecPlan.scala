@@ -11,6 +11,17 @@ import org.apache.spark.sql.SparkSession
   */
 object ExecPlan {
   def main(args: Array[String]): Unit = {
+    if (args.isEmpty) {
+      System.err.println("usage: graft.dev.ExecPlan <sfDir> <query...>")
+      sys.exit(2)
+    }
+    val queries = graft.SparkEntry.queries
+    val unknown = args.drop(1).filterNot(queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown query: ${unknown.mkString(", ")}; valid queries: " +
+        queries.keys.toSeq.sorted.mkString(", "))
+      sys.exit(2)
+    }
     val sfDir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -21,7 +32,7 @@ object ExecPlan {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (q <- args.drop(1)) {
-      val df = graft.SparkEntry.queries(q)(spark, sfDir)
+      val df = queries(q)(spark, sfDir)
       graft.Bench.materialize(df)
       println(s"===== $q (executed) =====")
       println(df.queryExecution.executedPlan.toString)

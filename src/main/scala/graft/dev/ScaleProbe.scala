@@ -370,18 +370,6 @@ object ScaleProbe {
         val (hSec, _) = minOf2(graft.Bench.materialize(sigShared(24)))
         println(f"""{"probe":"simhash_cost","sf":"$sfDir","docs":$nDocs,"width":$width,"shingle_rows":$shRows,"seam_sec":$aSec%.3f,"sha_proj_sec":$bSec%.3f,"agg_unsplit_sec":$cSec%.3f,"agg_chunk95_sec":$dSec%.3f,"agg_unsplit_hml8k_sec":$eSec%.3f,"agg_chunk95_hml8k_sec":$fSec%.3f,"agg_sharedx_chunk40_sec":$gSec%.3f,"agg_sharedx_chunk24_sec":$hSec%.3f}""")
 
-      case "explain" =>
-        // print the EXECUTED adaptive plan of a named battery query
-        // (args: explain <query> [sfDir]) — AQE finalizes reuse
-        // decisions only at execution, so an unexecuted .explain can
-        // lie about ReusedExchange.
-        val name = args.lift(1).getOrElse(sys.error("explain <query> [sfDir]"))
-        val dir2 = args.lift(2).getOrElse("/root/testdata/sf0.01")
-        val df = graft.SparkEntry.queries(name)(spark, dir2)
-        // execute THIS queryExecution (a write would execute a copy and
-        // leave this plan isFinalPlan=false, hiding runtime reuse)
-        df.queryExecution.toRdd.count()
-        println(df.queryExecution.executedPlan.toString)
       case other =>
         System.err.println(s"unknown probe: $other")
         sys.exit(2)

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.util.LongAccumulator
 
 /** Cluster resolution over near-duplicate pairs — the step every real
   * dedup pipeline needs AFTER pair detection and that the reference's
@@ -15,23 +20,25 @@ import org.apache.spark.sql.functions._
   *
   * Algorithm: alternating large-star / small-star (Kiveris, Lattanzi,
   * Mirrokni, Rastogi, Vassilvitskii — "Connected Components in
-  * MapReduce and Beyond", SoCC'14). Each round is two hash-shuffles
-  * (group by node, re-emit edges); the edge list provably never grows
-  * (|E| is non-increasing) and converges to a star forest — every node
-  * pointing at its component's minimum id — in O(log² n) rounds on ANY
-  * graph. That guarantee is why this beats the naive min-label
-  * propagation loop at 100 TB: label propagation needs O(diameter)
-  * rounds, and template-drift chains (A≈B≈C≈… with A≉C) give near-dup
-  * graphs unbounded diameter; star contraction does not care.
+  * MapReduce and Beyond", SoCC'14). The edge list provably never grows
+  * and converges to a star forest — every node pointing at its
+  * component's minimum id — in O(log² n) rounds on ANY graph, where
+  * min-label propagation needs O(diameter) rounds and template-drift
+  * chains (A≈B≈C≈… with A≉C) give near-dup graphs unbounded diameter.
   *
-  * Driver-side control is ONE scalar convergence probe per round
-  * ((count, checksum) of the edge list — no data is ever collected),
-  * and lineage is truncated each round so the plan stays O(1) deep
-  * instead of growing by two shuffles per iteration — both standard
-  * for iterative algorithms on Spark (GraphX Pregel does exactly
-  * this). Truncation defaults to `localCheckpoint` (executor blocks);
-  * pass `checkpointDir` for a RELIABLE checkpoint that survives
-  * executor loss — see [[graft.core.IterCheckpoint]].
+  * Execution: plain RDD work, ONE Spark job per round and no per-round
+  * query plan or session conf write. Edges point child → parent, the
+  * parent being the smaller id, and between rounds each edge is held
+  * from both ends as (node, neighbour) records, partitioned by node and
+  * sorted — so in a node's run its parents come first, and every pass
+  * streams the run without buffering it (after round one a root
+  * neighbours its whole near-dup cluster). A round is two shuffles:
+  * large-star → small-star keyed by child, small-star → the round-end
+  * pass keyed by node, whose output is the next round's input. The
+  * round-end pass also raises the not-converged flag, so the round's one
+  * action both materializes its truncated runs and settles convergence.
+  * Truncation is `localCheckpoint` unless `checkpointDir` asks for a
+  * RELIABLE checkpoint — see [[graft.core.IterCheckpoint]].
   */
 object DedupClusters {
 
@@ -39,58 +46,62 @@ object DedupClusters {
     * 40 alternations cover any conceivable corpus (2^20 diameter). */
   val MaxRounds = 40
 
-  /** Large-star: every node connects its LARGER neighbors to the
-    * minimum of its neighborhood (incl. itself). Two shuffles.
-    *
-    * NO distinct here (r17): within a round the output feeds ONLY
-    * [[smallStar]], whose min-agg is duplicate-insensitive and whose
-    * own round-end distinct restores set semantics — so the edge SET
-    * per round (and the Kiveris et al. |E| non-increase guarantee,
-    * which needs dedup once per round) is unchanged, while each round
-    * saves one full exchange + aggregation pass. Pre-distinct volume
-    * is exactly one row per input edge (each undirected edge survives
-    * the v > u filter once), so the duplicates smallStar absorbs are
-    * bounded by per-node degree, never a blow-up. */
-  private def largeStar(edges: DataFrame): DataFrame = {
-    val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-    val mins = sym.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
-    sym.join(mins, "u")
-      .where(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .where(col("u") =!= col("v"))
+  /** Shuffles records into node runs sorted by (node, neighbour). */
+  private def byNode(recs: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Long)] =
+    recs.map((_, ())).repartitionAndSortWithinPartitions(part).keys
+
+  /** `f(node, neighbour, head)` per record of sorted runs, where `head`
+    * is the first — smallest — neighbour of the record's run. */
+  private def withHead[T](runs: Iterator[(Long, Long)])(
+      f: (Long, Long, Long) => Iterator[T]): Iterator[T] = {
+    var node, head = 0L
+    var started = false
+    runs.flatMap { case (x, y) =>
+      if (!started || x != node) { node = x; head = y; started = true }
+      f(x, y, head)
+    }
   }
 
-  /** Small-star: orient edges large→small, then every node connects its
-    * (smaller) neighbors — and itself — to the neighborhood minimum. */
-  private def smallStar(edges: DataFrame): DataFrame = {
-    val dir = edges.select(
-      greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-    val mins = dir.groupBy("u").agg(min(col("v")).as("m"))
-    dir.join(mins, "u")
-      .select(col("v").as("u"), col("m").as("v"))
-      .union(mins.select(col("u"), col("m").as("v")))
-      .where(col("u") =!= col("v"))
-      .distinct()
+  /** An edge child → parent as the records of both of its ends. */
+  private def bothWays(child: Long, parent: Long) = Iterator((child, parent), (parent, child))
+
+  /** Large-star: a node points each LARGER neighbour at the minimum of
+    * its neighbourhood and itself. Emits (child, offered parent). */
+  private def largeStar(runs: Iterator[(Long, Long)]) = withHead(runs) { (x, y, head) =>
+    if (y > x) Iterator.single((y, math.min(x, head))) else Iterator.empty
   }
 
-  /** Convergence probe: the alternating algorithm's fixed points are
-    * exactly star forests, and an edge list is a star forest iff no
-    * node has two parents and no node is both child and parent — one
-    * aggregation over the tagged node stream, detected the ROUND the
-    * forest forms (a fingerprint-compare would burn one more full
-    * contraction round just to confirm the fixed point). */
-  private def isStarForest(edges: DataFrame): Boolean =
-    edges.select(col("u"), lit(1L).as("c"), lit(0L).as("p"))
-      .union(edges.select(col("v"), lit(0L).as("c"), lit(1L).as("p")))
-      .groupBy(col("u"))
-      .agg(sum(col("c")).as("c"), sum(col("p")).as("p"))
-      .where(col("c") > 1 || (col("c") > 0 && col("p") > 0))
-      .isEmpty
+  /** Small-star over offers keyed by child: the smallest offer becomes
+    * the parent of the node and of every other offered parent. */
+  private def smallStar(runs: Iterator[(Long, Long)]) = withHead(runs) { (x, y, head) =>
+    if (y == head) bothWays(x, head) else bothWays(y, head)
+  }
+
+  /** Round end: drops duplicate records and raises `unstable` where a
+    * node breaks the star-forest property — a second parent, or a child
+    * after a parent. The flag only goes up, so task retries cannot
+    * change what it reads as. */
+  private def roundEnd(runs: Iterator[(Long, Long)], unstable: LongAccumulator) = {
+    var node, prev = 0L
+    var started, hasParent = false
+    runs.filter { case (x, y) =>
+      val nextNode = !started || x != node
+      val fresh = nextNode || y != prev
+      if (fresh) {
+        if (nextNode) { node = x; hasParent = false; started = true }
+        if (hasParent) unstable.add(1)
+        if (y < x) hasParent = true
+        prev = y
+      }
+      fresh
+    }
+  }
 
   /** Connected components of the undirected graph given as a pair list.
     *
     * @param pairs  confirmed near-dup pairs (each row one undirected
-    *               edge; self-loops and duplicates tolerated)
+    *               edge with integral ids; self-loops, duplicates and
+    *               rows with a null id tolerated)
     * @param checkpointDir  when set, per-round lineage truncation uses
     *               a RELIABLE `checkpoint` into this fault-tolerant
     *               directory instead of executor-block
@@ -98,83 +109,72 @@ object DedupClusters {
     *               jobs where an executor loss mid-iteration must not
     *               kill the run (see [[graft.core.IterCheckpoint]])
     * @return (node, component) for every node that appears in `pairs`,
-    *         where component = the minimum node id reachable from it
+    *         where component = the minimum node id reachable from it,
+    *         both of the ids' input type
     */
   def components(
       pairs: DataFrame,
       aCol: String = "doc_a",
       bCol: String = "doc_b",
       checkpointDir: Option[String] = None): DataFrame = {
-    // One ACTION per round, not two: the truncation is LAZY for the
-    // localCheckpoint path, so the star-forest probe's own job is what
-    // materializes the round's blocks (the probe's aggregation reads
-    // every edge anyway — its map stage computes and persists the
-    // checkpoint as a side effect). An eager truncate + separate probe
-    // re-ran the round's whole AQE pipeline as a second driver action;
-    // at fixture scale that fixed per-action latency was the bulk of
-    // the contraction's wall (the resolve family is job-count-bound:
-    // dedup_clusters measured 24 driver jobs for ~5 task-seconds of
-    // work). The reliable-checkpoint dial stays EAGER: a lazy reliable
-    // checkpoint recomputes the round to write its files (a second job
-    // by construction), so laziness buys nothing there.
-    def trunc(df: DataFrame) = graft.core.IterCheckpoint.truncate(
-      df, checkpointDir, eager = checkpointDir.isDefined)
-    // orient big→small up front: the star-forest probe assumes the
-    // child→min convention, and this lets an already-star input (all
-    // disjoint pairs) converge with zero contraction rounds
-    var edges = trunc(pairs
-      .select(
-        greatest(col(aCol), col(bCol)).as("u"),
-        least(col(aCol), col(bCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct())
-    var converged = isStarForest(edges)
-    var round = 0
     val sess = pairs.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = sess.conf.get(aqeKey)
-    val loopAqe = sys.env.contains("GRAFT_AB_LOOP_AQE")
-    if (!loopAqe) sess.conf.set(aqeKey, "false")
-    try {
+    // greatest/least skip nulls: a row with one null id is a self-loop
+    val oriented = pairs.select(
+      greatest(col(aCol), col(bCol)).as("u"), least(col(aCol), col(bCol)).as("v"))
+    val idType = oriented.schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"components needs integral ids; $aCol, $bCol are ${idType.simpleString}")
+    val input = oriented.where(col("u") =!= col("v"))
+      .select(col("u").cast(LongType), col("v").cast(LongType)).queryExecution
+    // routes a (node, neighbour) record by its node alone
+    val n = sess.sessionState.conf.numShufflePartitions
+    val part = new Partitioner {
+      val numPartitions = n
+      def getPartition(key: Any) = java.lang.Math.floorMod(
+        java.lang.Long.hashCode(key.asInstanceOf[(Long, Long)]._1), numPartitions)
+    }
+    // a round's one job: the count materializes its runs and its flag
+    def settle(recs: RDD[(Long, Long)]): (RDD[(Long, Long)], Boolean) = {
+      val unstable = sess.sparkContext.longAccumulator
+      val runs = graft.core.IterCheckpoint.truncate(
+        byNode(recs, part).mapPartitions(roundEnd(_, unstable)), checkpointDir)
+      runs.count()
+      (runs, unstable.value == 0)
+    }
+    // the input pass runs the pair plan as one SQL execution, so the UI
+    // and query listeners still see it; an input that is already a star
+    // forest (all disjoint pairs) converges here, with zero rounds
+    var (runs, converged) = SQLExecution.withNewExecutionId(input, Some("components"))(
+      settle(input.toRdd.flatMap(r => bothWays(r.getLong(0), r.getLong(1)))))
+    var round = 0
     while (!converged && round < MaxRounds) {
-      val prev = edges
-      edges = trunc(smallStar(largeStar(edges)))
-      // the probe is the materializing action for the lazy round; only
-      // AFTER it has run are prev's blocks dead (the new round read
-      // them) — release then, instead of waiting for driver GC, or a
-      // multi-round contraction holds every round's corpus-sized edge
-      // list in executor memory at once (the measured cause of the
-      // 100×-soak memory thrash; see IterCheckpoint.release). Every
-      // released frame was created inside THIS call (the round-0 input
-      // truncation included — its release cannot touch the caller's
-      // own plans or checkpoints); the final round is never prev, so
-      // the returned DataFrame keeps its blocks.
-      converged = isStarForest(edges)
-      graft.core.IterCheckpoint.release(prev)
+      val prev = runs
+      val (next, done) = settle(
+        byNode(prev.mapPartitions(largeStar), part).mapPartitions(smallStar))
+      // prev is dead once the next round has materialized from it: free
+      // its blocks now, not at driver GC (see IterCheckpoint.release)
+      prev.unpersist(blocking = false)
+      runs = next
+      converged = done
       round += 1
     }
-    } finally if (!loopAqe) sess.conf.set(aqeKey, prevAqe)
     require(converged, s"components() did not converge in $MaxRounds rounds")
-    // Star forest: every non-root points at its component min; roots
-    // (the minima themselves) have no outgoing edge — add them back.
-    // Shaped as one explode rather than a self-union: a union here
-    // leaks the checkpointed edges' attrs into downstream UnionBase
-    // constraint rewrites (Catalyst NoSuchElementException when a
-    // caller unions over this output, as merge() does), and the
-    // explode keeps the output plan a single narrow scan.
-    edges
-      .select(explode(array(
-        struct(col("u").as("node"), col("v").as("component")),
-        struct(col("v").as("node"), col("v").as("component")))).as("__nc"))
-      .select(col("__nc.node").as("node"), col("__nc.component").as("component"))
-      .distinct()
+    // star forest: a non-root's run is headed by its one parent, the
+    // root; a root's run holds only children
+    val assignment = runs.mapPartitions(withHead(_) { (x, y, head) =>
+      if (y == head) Iterator.single(Row(x, math.min(x, head))) else Iterator.empty
+    })
+    // Row + schema plans as a codegen'd RDD scan; a tuple RDD would not
+    sess.createDataFrame(assignment, new StructType()
+        .add("node", LongType, nullable = false).add("component", LongType, nullable = false))
+      .select(Seq("node", "component").map(c => col(c).cast(idType).as(c)): _*)
   }
 
   /** Full dedup-cluster resolution: components + per-cluster size +
     * the keep/drop verdict (canonical = the cluster's minimum doc id —
     * deterministic, join-free to name, and stable under re-runs).
-    * The size window repartitions by component, which is exactly the
-    * partitioning `components` already produced. */
+    * The size window hash-partitions by component: one shuffle, run
+    * by the caller's action, not while the frame is built. */
   def resolve(
       pairs: DataFrame,
       aCol: String = "doc_a",
@@ -207,8 +207,9 @@ object DedupClusters {
     * anti-join scan with its size and canonical flag intact. A star
     * forest is already a fixed point of the contraction, so the loop's
     * work tracks how much the increment actually perturbs — disjoint
-    * tranches converge in the probe round. Assignment rows are two
-    * longs; the pass-through scan is the cheap part at any scale.
+    * tranches converge in the input pass, with zero rounds. Assignment
+    * rows are two longs; the pass-through scan is the cheap part at any
+    * scale.
     *
     * @param clusters prior assignment in [[resolve]]'s shape (one row
     *                 per doc: doc_id, cluster_id, cluster_size,

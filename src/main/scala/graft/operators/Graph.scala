@@ -62,9 +62,9 @@ object Graph {
     * that survives executor loss ([[graft.core.IterCheckpoint]]).
     *
     * The EDGE list is materialized once (GraphX's cache-the-graph
-    * move, and the same seam [[DedupClusters.components]] applies to
-    * its pair input): callers here feed DERIVED graphs — a k-NN graph
-    * is itself an LSH-bucket + top-k pipeline — and without the
+    * move; [[DedupClusters.components]] likewise reads its pairs once):
+    * callers here feed DERIVED graphs — a k-NN graph is
+    * itself an LSH-bucket + top-k pipeline — and without the
     * truncation every round's DAG re-inlines that whole subtree,
     * growing planning + codegen linearly in rounds even when AQE
     * dedupes the execution. The truncation is LAZY (`eager = false`):
