@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Failure-honest: a query
@@ -381,15 +381,8 @@ object Bench {
     sys.env.getOrElse("SPARK_GRAFT_SOAK_CAND_FLOOR", "10000").toLong
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.Session.cpus
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
     // the seam/iterative-resolver releases fire one benign WARN per
     // unpersist ("locally checkpointed ... cannot be recomputed") —
     // a dozen of them sit right above the final JSON line and eat the
@@ -409,9 +402,8 @@ object Bench {
     // record prove — by itself — whether a round-over-round swing is
     // host drift or a plan change. A short untimed call first absorbs
     // the probe loop's own JIT compilation.
-    val nThreads = cpus.toInt
     HostProbe.mixChecksum(7L, HostProbe.Iters / 16)
-    val (pre1t, preMt, preChk) = HostProbe.measure(nThreads)
+    val (pre1t, preMt, preChk) = HostProbe.measure(cpus)
 
     def esc(s: String): String =
       s.flatMap {
@@ -531,7 +523,7 @@ object Bench {
     val retryBudget =
       math.max(RetryBudgetFloorSec, RetryBudgetFrac * firstPassTotal)
     val gate = new RetryGate(prior, priorMt, hostRatioPre,
-      probeMt = () => HostProbe.measureMt(nThreads),
+      probeMt = () => HostProbe.measureMt(cpus),
       budgetSec = retryBudget)
     val retried = scala.collection.mutable.ArrayBuffer.empty[String]
     var retrySec = 0.0
@@ -560,7 +552,7 @@ object Bench {
       }
     retrySec += gate.reprobeSec
 
-    val (post1t, postMt, postChk) = HostProbe.measure(nThreads)
+    val (post1t, postMt, postChk) = HostProbe.measure(cpus)
     // raw (unfloored) pre/post ratios + their mean: the record's own
     // evidence of host conditions across the WHOLE run. The advisory
     // drift-adjusted total divides by the interpolated slowdown
@@ -616,7 +608,7 @@ object Bench {
     val midMts = gate.reprobeMts
       .map(v => f"$v%.4f").mkString("[", ",", "]")
     val probePart =
-      f""","probe":{"pre_1t":$pre1t%.4f,"pre_mt":$preMt%.4f,"post_1t":$post1t%.4f,"post_mt":$postMt%.4f,"threads":$nThreads,"iters":${HostProbe.Iters},"chk":"${(preChk * 31 + postChk).toHexString}","host_ratio":${f"${gate.ratio}%.3f"},"ratio_pre":$ratioPreRaw%.3f,"ratio_post":$ratioPostRaw%.3f,"host_ratio_interp":$ratioInterp%.3f,"mid_mts":$midMts}"""
+      f""","probe":{"pre_1t":$pre1t%.4f,"pre_mt":$preMt%.4f,"post_1t":$post1t%.4f,"post_mt":$postMt%.4f,"threads":$cpus,"iters":${HostProbe.Iters},"chk":"${(preChk * 31 + postChk).toHexString}","host_ratio":${f"${gate.ratio}%.3f"},"ratio_pre":$ratioPreRaw%.3f,"ratio_post":$ratioPostRaw%.3f,"host_ratio_interp":$ratioInterp%.3f,"mid_mts":$midMts}"""
     // drift-adjusted advisory total: total ÷ the interpolated slowdown
     // (≥ 1). NOT the headline — the measured total stays `value`; this
     // is the "what would an un-degraded host have measured" companion.

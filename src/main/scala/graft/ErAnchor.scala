@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Entity resolution measured on a REAL-VOCABULARY roster at ~1M
@@ -41,14 +41,8 @@ object ErAnchor {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_ER_ROSTER", "1000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.Session.cpus
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
     import graft.operators.Er
 
     // ---- real vocabulary, dense-indexed --------------------------------

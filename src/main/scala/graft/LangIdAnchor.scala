@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Language-ID measured on REAL text with known labels — the r16
@@ -45,14 +44,7 @@ object LangIdAnchor {
     "pg67767" -> "pt")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.builder(graft.core.Session.cpus).getOrCreate()
     import spark.implicits._
     import graft.operators.{Eval, TextAnalysis}
 

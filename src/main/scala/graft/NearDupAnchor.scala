@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The near-dup family at the reference's own 4 GB scale, on REAL text
@@ -51,7 +51,7 @@ object NearDupAnchor {
       "SPARK_GRAFT_NEARDUP_SIZES_MB", "1024,2048,4096")
       .split(",").map(_.trim.toLong).toSeq.sorted
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale4g/books")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.Session.cpus
     val dfCap = sys.env.getOrElse("SPARK_GRAFT_NEARDUP_DF_CAP", "20").toLong
 
     val genT0 = System.nanoTime()
@@ -61,13 +61,7 @@ object NearDupAnchor {
     val genSec = (System.nanoTime() - genT0) / 1e9
     val perReplica = bytes / nReplicas
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
 
     import graft.operators.{Multimodal, NearDup}
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The reference's OWN published scale, reproduced: a ~4 GB corpus
@@ -173,7 +172,7 @@ object ScaleAnchor {
       .split(",").map(_.trim.toLong).toSeq.sorted
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale4g/books")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.Session.cpus
 
     val genT0 = System.nanoTime()
     val fullDir = java.nio.file.Paths.get(outRoot)
@@ -181,13 +180,7 @@ object ScaleAnchor {
     val genSec = (System.nanoTime() - genT0) / 1e9
     val perReplica = bytes / nReplicas
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
 
     def pipeline(dir: String) = graft.operators.WordStats.fromLines(
       graft.sources.ChunkedTextSource(Seq(dir)).load(spark))
@@ -235,9 +228,9 @@ object ScaleAnchor {
     // (1 + (1 − n_cpu/cpus_total)), n_cpu = 90% of cores
     // (example/main.py:54,198,207) — the honest comparison point; the
     // flat 1.95 MB/s is the published 8-CPU figure.
-    val nCpu = math.max(1, (cpus.toInt * 0.9).toInt)
+    val nCpu = math.max(1, (cpus * 0.9).toInt)
     val modelSecPerKb = 0.00050067901 * (8.0 / nCpu) *
-      (1.0 + (1.0 - nCpu.toDouble / cpus.toInt))
+      (1.0 + (1.0 - nCpu.toDouble / cpus))
     val modelMbPerSec = 1.0 / (modelSecPerKb * 1024)
 
     val curve = points.map(p =>

@@ -760,9 +760,8 @@ object SparkEntry {
   // constant so the DuckDB oracle text interpolates the identical value
   // (engine and oracle can never drift), mirroring lshBucketsCte.
 
-  /** sf0.1 fixture sizes the dials are derived from (documents.parquet
-    * holds 5,000 docs; embeddings.parquet holds 2,000 vectors). */
-  val ScaledDocCorpus: Long = 5000L
+  /** sf0.1 fixture size the IVF dial is derived from (embeddings.parquet
+    * holds 2,000 vectors). */
   val ScaledEmbCorpus: Long = 2000L
 
   /** Scaled SimHash: 16 bands × simHashBandBitsFor-sized band entropy.
@@ -847,10 +846,10 @@ object SparkEntry {
 
   /** Scaled sign-LSH ANN: planes for ≈16-vector buckets (the finer
     * 100 TB granularity vs the default ≈32), 2 independent hyperplane
-    * families for recall. planesFor(500, 16) = 5, the value
-    * lshScaledSql interpolates. */
+    * families for recall. lshScaledSql derives the plane count from the
+    * live corpus with `planesExprSql(ScaledLshTargetBucket)` (5 at the
+    * 500-vector verify corpus). */
   val ScaledLshTargetBucket: Long = 16L
-  val ScaledLshPlanes: Int = Embeddings.planesFor(VerifyEmbCorpus, ScaledLshTargetBucket)
   val ScaledLshTables: Int = 2
 
   /** Corpus-derived plane count every knnGraph battery consumer
@@ -3880,6 +3879,26 @@ object SparkEntry {
           expr("(n_tokens * 100) div n_docs").as("mean_tokens_x100"),
           expr("(n_dup_docs * 10000) div n_docs").as("dup_x10000")))
   )
+
+  /** Why a main's command line is bad, or None: `usage` when `argsOk` is
+    * false, otherwise the names in `names` that are not [[queries]] keys,
+    * with the valid ones. */
+  def cliError(usage: String, argsOk: Boolean, names: Seq[String]): Option[String] = {
+    val known = queries.keySet
+    if (!argsOk) Some(s"usage: $usage")
+    else names.filterNot(known) match {
+      case Seq() => None
+      case unknown => Some(s"unknown query: ${unknown.mkString(", ")}; " +
+        s"valid queries: ${known.toSeq.sorted.mkString(", ")}")
+    }
+  }
+
+  /** Prints [[cliError]]'s message and exits 2, before a main starts Spark. */
+  def checkCli(usage: String, argsOk: Boolean, names: Seq[String]): Unit =
+    cliError(usage, argsOk, names).foreach { msg =>
+      System.err.println(msg)
+      sys.exit(2)
+    }
 
   def oracleSql: Map[String, String] = Map(
     "wordstats" ->

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The substring-granular dedup family (Lee et al. recast —
@@ -53,7 +53,7 @@ object SubstringAnchor {
       .split(",").map(_.trim.toLong).toSeq.sorted
     val outRoot = sys.env.getOrElse(
       "SPARK_GRAFT_SUBSTR_DIR", "target/scale4g/books_plain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.Session.cpus
 
     // ---- plain-copy corpus (the reference's literal recipe) ---------
     val genT0 = System.nanoTime()
@@ -62,13 +62,7 @@ object SubstringAnchor {
     val genSec = (System.nanoTime() - genT0) / 1e9
     val perReplica = bytes / nReplicas
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
 
     import graft.operators.NearDup
 

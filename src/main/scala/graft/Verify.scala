@@ -1,24 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (local
     // iteration aid; the driver always runs the full battery)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    SparkEntry.checkCli("graft.Verify <sfDir> <outDir> [query,...]",
+      args.length == 2 || args.length == 3, only.toSeq.flatten.sorted)
+    val (sfDir, outDir) = (args(0), args(1))
+    val spark = graft.core.Session.builder(graft.core.Session.cpus).getOrCreate()
     // Fixture-schema guard: name any drifted column BEFORE the battery
     // turns it into n generic analysis errors (the round-8 events.ts
     // regen cost 18 queries before any diagnostic named the column).

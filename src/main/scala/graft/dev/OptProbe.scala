@@ -1,7 +1,6 @@
 package graft.dev
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart, SparkListenerJobEnd}
-import org.apache.spark.sql.SparkSession
 
 /** r17 optimization-round instrumentation: per-query wall decomposition.
   *
@@ -16,16 +15,11 @@ import org.apache.spark.sql.SparkSession
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
+    graft.SparkEntry.checkCli("graft.dev.OptProbe <sfDir> <reps> <query...>",
+      args.length > 2 && args(1).toIntOption.exists(_ > 0), args.toSeq.drop(2))
     val sfDir = args(0)
     val reps = args(1).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.builder(graft.core.Session.cpus).getOrCreate()
 
     @volatile var jobs = 0
     @volatile var stages = 0

@@ -16,19 +16,12 @@ import org.apache.spark.sql.SparkSession
 object ScaleProbe {
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.Session.cpus
     // partitions override: per-task memory experiments (e.g. the ER
     // shuffle_hash build) need partitions sized independently of cores
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    graft.core.Session.builder(cpus).config("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString))
       .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
   }
 
   private def minOf2(body: => Long): (Double, Long) = {
@@ -198,7 +191,6 @@ object ScaleProbe {
         // vs shuffle_hash (per-task hash build over narrow (key, id)
         // rows — the layout the 10x OOM predates). args:
         // er_join_hint [sfDir] [soakScale]
-        import org.apache.spark.sql.functions._
         val scale = args.lift(2).map(_.toInt).filter(_ > 1)
         val dir2 = scale match {
           case Some(n) => graft.Soak.materializeDir(spark, sfDir, n)
@@ -261,114 +253,6 @@ object ScaleProbe {
               s"$shuffleJoins/$broadcastJoins:\n${p.take(3000)}")
           spark.stop(); sys.exit(1)
         }
-
-      case "simhash_cost" =>
-        // Decompose the scaled-SimHash signature stage (the battery's
-        // hottest per-task compute, r18): over the SAME checkpointed
-        // shingle seam, time (a) a bare materialization of the seam,
-        // (b) the sha256 hash-word projection alone, (c/d/e) the
-        // signature aggregation at different column-chunk sizes —
-        // separating "the sha is the cost" from "the N-buffer agg's
-        // codegen shape is the cost".
-        import org.apache.spark.sql.Column
-        import org.apache.spark.sql.functions._
-        import graft.operators.NearDup
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val nDocs = docs.count()
-        val bits = math.min(NearDup.simHashBandBitsFor(nDocs),
-          NearDup.Sha256Family.maxWidthBits / NearDup.SimHashBands)
-        val width = NearDup.SimHashBands * bits
-        val sh = NearDup.shingles(docs).localCheckpoint()
-        val shRows = sh.count()
-        val fam = NearDup.Sha256Family
-        val hashWords = (width + fam.wordBits - 1) / fam.wordBits
-        val proj = sh.select(col("doc_id") +:
-          (0 until hashWords).map(w => fam.word(w, col("s")).as(s"__h$w")): _*)
-        // signature agg with a parametrizable chunk size (mirror of
-        // NearDup.simHashSignatures, minus the fresh-name hygiene —
-        // the probe owns its frame)
-        def sig(chunkSize: Int): org.apache.spark.sql.DataFrame = {
-          val projected = proj
-          def bit(j: Int): Column =
-            shiftright(col(s"__h${j / fam.wordBits}"), j % fam.wordBits)
-              .bitwiseAND(1)
-          val half = (width + 1) / 2
-          val packs = (0 until half).map { k =>
-            val packed =
-              if (k + half < width) bit(k) + shiftleft(bit(k + half), 32)
-              else bit(k)
-            sum(packed).as(s"__p$k")
-          }
-          val agged =
-            if (chunkSize >= packs.size)
-              projected.groupBy(col("doc_id")).agg(count(lit(1)).as("__cnt"), packs: _*)
-            else packs.grouped(chunkSize).toSeq.zipWithIndex.map { case (c, i) =>
-              if (i == 0)
-                projected.groupBy(col("doc_id")).agg(count(lit(1)).as("__cnt"), c: _*)
-              else projected.groupBy(col("doc_id")).agg(c.head, c.tail: _*)
-            }.reduce(_.join(_, Seq("doc_id")))
-          def pop(j: Int): Column =
-            if (j < half) col(s"__p$j").bitwiseAND(lit(0xFFFFFFFFL))
-            else shiftrightunsigned(col(s"__p${j - half}"), 32)
-          val sigWords = (width + 63) / 64
-          agged.select(col("doc_id") +: (0 until sigWords).map { w =>
-            (0 until math.min(64, width - 64 * w)).map { j =>
-              val jj = 64 * w + j
-              when(pop(jj) * 2 > col("__cnt"), lit(1L << j)).otherwise(lit(0L))
-            }.reduce(_ bitwiseOR _).as(s"__sig$w")
-          }: _*)
-        }
-        graft.Bench.materialize(sig(95)) // warmup
-        val (aSec, _) = minOf2(graft.Bench.materialize(sh))
-        val (bSec, _) = minOf2(graft.Bench.materialize(proj))
-        val (cSec, _) = minOf2(graft.Bench.materialize(sig(Int.MaxValue)))
-        val (dSec, _) = minOf2(graft.Bench.materialize(sig(95)))
-        // JIT hypothesis: HotSpot never compiles methods > 8000 bytecode
-        // (DontCompileHugeMethods); a ~100-buffer agg update inside ONE
-        // whole-stage doConsume exceeds that and runs INTERPRETED.
-        // hugeMethodLimit=8000 makes Spark itself fall back to the
-        // non-whole-stage HashAggregate whose generated projections are
-        // split into small, JIT-able methods.
-        spark.conf.set("spark.sql.codegen.hugeMethodLimit", "8000")
-        graft.Bench.materialize(sig(Int.MaxValue)) // re-warm under the conf
-        val (eSec, _) = minOf2(graft.Bench.materialize(sig(Int.MaxValue)))
-        val (fSec, _) = minOf2(graft.Bench.materialize(sig(95)))
-        spark.conf.unset("spark.sql.codegen.hugeMethodLimit")
-        // shared projected exchange: sha computed once BELOW a pinned
-        // exchange of (id, __h0..__h4); chunk aggs reuse it
-        val projX = proj.repartition(
-          spark.sessionState.conf.numShufflePartitions, col("doc_id"))
-        def sigShared(chunkSize: Int): org.apache.spark.sql.DataFrame = {
-          def bit(j: Int): Column =
-            shiftright(col(s"__h${j / fam.wordBits}"), j % fam.wordBits)
-              .bitwiseAND(1)
-          val half = (width + 1) / 2
-          val packs = (0 until half).map { k =>
-            val packed =
-              if (k + half < width) bit(k) + shiftleft(bit(k + half), 32)
-              else bit(k)
-            sum(packed).as(s"__p$k")
-          }
-          val agged = packs.grouped(chunkSize).toSeq.zipWithIndex.map { case (c, i) =>
-            if (i == 0)
-              projX.groupBy(col("doc_id")).agg(count(lit(1)).as("__cnt"), c: _*)
-            else projX.groupBy(col("doc_id")).agg(c.head, c.tail: _*)
-          }.reduce(_.join(_, Seq("doc_id")))
-          def pop(j: Int): Column =
-            if (j < half) col(s"__p$j").bitwiseAND(lit(0xFFFFFFFFL))
-            else shiftrightunsigned(col(s"__p${j - half}"), 32)
-          val sigWords = (width + 63) / 64
-          agged.select(col("doc_id") +: (0 until sigWords).map { w =>
-            (0 until math.min(64, width - 64 * w)).map { j =>
-              val jj = 64 * w + j
-              when(pop(jj) * 2 > col("__cnt"), lit(1L << j)).otherwise(lit(0L))
-            }.reduce(_ bitwiseOR _).as(s"__sig$w")
-          }: _*)
-        }
-        graft.Bench.materialize(sigShared(40)) // warmup
-        val (gSec, _) = minOf2(graft.Bench.materialize(sigShared(40)))
-        val (hSec, _) = minOf2(graft.Bench.materialize(sigShared(24)))
-        println(f"""{"probe":"simhash_cost","sf":"$sfDir","docs":$nDocs,"width":$width,"shingle_rows":$shRows,"seam_sec":$aSec%.3f,"sha_proj_sec":$bSec%.3f,"agg_unsplit_sec":$cSec%.3f,"agg_chunk95_sec":$dSec%.3f,"agg_unsplit_hml8k_sec":$eSec%.3f,"agg_chunk95_hml8k_sec":$fSec%.3f,"agg_sharedx_chunk40_sec":$gSec%.3f,"agg_sharedx_chunk24_sec":$hSec%.3f}""")
 
       case other =>
         System.err.println(s"unknown probe: $other")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -62,8 +62,4 @@ object Dedup {
       .filter(col(rnC) > 1)
       .select(payload.map(col): _*)
   }
-
-  /** Plain exact distinct on key columns (order-insensitive DISTINCT). */
-  def distinctOn(keys: Seq[String]): Transform =
-    df => df.dropDuplicates(keys)
 }

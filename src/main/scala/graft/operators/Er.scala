@@ -98,7 +98,7 @@ object Er {
       idCol: String,
       nameCol: String,
       maxKeyFreq: Option[Long],
-      maxEdit: Int = 1): DataFrame = {
+      maxEdit: Int): DataFrame = {
     // Spread the roster BEFORE the key explode: the explode fans out
     // ~(L+1)× (depth 1) to ~L²/2× (depth 2) rows per input row, so the
     // map stage's cost tracks the OUTPUT volume while its input split

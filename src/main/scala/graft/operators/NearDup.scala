@@ -79,7 +79,6 @@ object NearDup {
     * [[simHashCandidates]] / [[simHashPairs]]; the defaults keep the
     * small-corpus exact mode. */
   val SimHashBands = 16
-  val SimHashBandBits = 4
   val HammingMax = 15
   val SimHashWidthBits = 64
 

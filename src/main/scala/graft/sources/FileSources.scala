@@ -171,12 +171,6 @@ final case class ChunkedTextSource(
         .toDF("file_path", "byte_offset", "line")
     }
   }
-
-  /** The [[WholeTextSource]] shape — `(file_path, content)` — from the
-    * splittable scan: offset-sorted line reassembly. See
-    * [[ChunkedTextSource.reassemble]] for the contract. */
-  def contents(spark: SparkSession): DataFrame =
-    ChunkedTextSource.reassemble(load(spark))
 }
 
 object ChunkedTextSource {

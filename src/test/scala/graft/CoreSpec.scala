@@ -64,6 +64,17 @@ class CoreSpec extends SparkSpecBase {
     Seq((1L, "x", 10L), (2L, "x", 20L), (3L, "y", 5L)).toDF("id", "k", "v")
   }
 
+  test("SparkEntry.cliError: usage line, unknown query names, or None") {
+    assert(SparkEntry.cliError("m <sfDir>", argsOk = false, Seq("wordstats")) ===
+      Some("usage: m <sfDir>"))
+    assert(SparkEntry.cliError("m <sfDir>", argsOk = true, Seq("wordstats")) === None)
+    assert(SparkEntry.cliError("m <sfDir>", argsOk = true, Nil) === None)
+    val msg = SparkEntry.cliError("m <sfDir>", argsOk = true,
+      Seq("wordstats", "no_such_query", "nor_this")).get
+    assert(msg.startsWith("unknown query: no_such_query, nor_this; valid queries: "), msg)
+    assert(SparkEntry.queries.keys.forall(msg.contains), msg)
+  }
+
   test("noop transform is identity (OneToOneNoopTransformer)") {
     val out = AttrsTransform.noop(df)
     assert(out.schema === df.schema)

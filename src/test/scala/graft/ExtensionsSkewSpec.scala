@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TableFunctionRegistry}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
 import graft.operators.Skew
@@ -9,95 +13,103 @@ import graft.operators.Skew
 class ExtensionsSkewSpec extends SparkSpecBase {
 
   test("GraftExtensions makes dot_product_long a SQL function") {
-    val base = spark // force init of the shared session first
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    // reuses the existing SparkContext; only the session (and its
-    // function registry, built through the extensions) is new
-    val s2 = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      val d = s2.sql(
-        "SELECT dot_product_long(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
-      assert(d.head.getLong(0) === 32L)
-      // and it participates in real query shapes
-      val viaTable = s2.sql(
-        """SELECT id, dot_product_long(v, v) AS nsq FROM
-          |  (SELECT 1L AS id, array(3L, 4L) AS v)""".stripMargin)
-      assert(viaTable.head.getLong(1) === 25L)
-      // second registered function: the shingle builder
-      val sh = s2.sql(
-        "SELECT distinct_shingles(array('a', 'b', 'c', 'b', 'c'), 2) AS s")
-      assert(sh.head.getSeq[String](0) === Seq("a b", "b c", "c b"))
-      // n is any FOLDABLE integral expression, not just a bare int
-      // literal: casts, arithmetic, and wider integer types all fold
-      for (nExpr <- Seq("CAST(2 AS INT)", "1 + 1", "CAST(2 AS BIGINT)", "CAST(2 AS SMALLINT)")) {
-        val viaFold = s2.sql(
-          s"SELECT distinct_shingles(array('a', 'b', 'c'), $nExpr) AS s")
-        assert(viaFold.head.getSeq[String](0) === Seq("a b", "b c"), nExpr)
-      }
-      // bad shapes fail ANALYSIS (position-carrying AnalysisException),
-      // not as a raw runtime error
-      val e = intercept[org.apache.spark.sql.AnalysisException] {
-        s2.sql("SELECT distinct_shingles(array('a'), 'two')").collect()
-      }
-      assert(e.getMessage.contains("foldable integer"), e.getMessage)
-      intercept[org.apache.spark.sql.AnalysisException] {
-        s2.sql("SELECT distinct_shingles(array('a'), 0)").collect()
-      }
-      // composed-from-built-ins registrations: determinism primitives
-      // share their single Scala definition with the SQL surface
-      val ho = s2.sql("SELECT hash_order(123) AS h")
-      assert(ho.head.getLong(0) ===
-        ((123L % 2147483647L) * graft.operators.Curation.HashMul) % 4294967296L)
-      val zv = s2.sql("SELECT z_value(3, 5, 3) AS z")
-      assert(zv.head.getLong(0) === 27L) // dimension-major interleave
-      intercept[org.apache.spark.sql.AnalysisException] {
-        s2.sql("SELECT z_value(x, 1) FROM (SELECT 1 AS x)").collect()
-      }
-      intercept[org.apache.spark.sql.AnalysisException] {
-        s2.sql("SELECT hash_order(1, 2)").collect()
-      }
-      // isqrt: exact roots incl. the int64 edge (no ANSI overflow)
-      val iq = s2.sql(
-        """SELECT isqrt(0), isqrt(24), isqrt(25), isqrt(26),
-          |       isqrt(9223372036854775807)""".stripMargin).head
-      assert((iq.getLong(0), iq.getLong(1), iq.getLong(2), iq.getLong(3),
-        iq.getLong(4)) === ((0L, 4L, 5L, 5L, 3037000499L)))
-      // matches the Column-API operator on a value table
-      val vals = "SELECT explode(array(0L, 1L, 8L, 9L, 1000000L)) AS n"
-      val viaCol = s2.sql(vals)
-        .select(graft.operators.Curation.isqrt(
-          org.apache.spark.sql.functions.col("n")).as("s"))
-        .collect().map(_.getLong(0)).toSeq
-      val viaSql = s2.sql(s"SELECT isqrt(n) FROM ($vals)")
-        .collect().map(_.getLong(0)).toSeq
-      assert(viaCol === viaSql)
-      intercept[org.apache.spark.sql.AnalysisException] {
-        s2.sql("SELECT isqrt(1, 2)").collect()
-      }
-      // unicode_normalize: composition, decomposition, compatibility
-      // (escapes: \u00e1 = precomposed a-acute, \u0301 = combining acute,
-      // \ufb01 = the fi ligature)
-      val un = s2.sql(
-        "SELECT unicode_normalize('a\u0301b', 'NFC') AS c, " +
-          "unicode_normalize('\u00e1b', 'nfd') AS d, " +
-          "unicode_normalize('\ufb01le', 'NFKC') AS k").head
-      assert(un.getString(0) === "\u00e1b")
-      assert(un.getString(1) === "a\u0301b")
-      assert(un.getString(2) === "file")
-      intercept[org.apache.spark.sql.AnalysisException] {
-        s2.sql("SELECT unicode_normalize('x', 'NFX')").collect()
-      }
-      intercept[org.apache.spark.sql.AnalysisException] {
-        s2.sql("SELECT unicode_normalize('x', form) FROM (SELECT 'NFC' AS form)")
-          .collect()
-      }
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
+    val d = spark.sql(
+      "SELECT dot_product_long(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
+    assert(d.head.getLong(0) === 32L)
+    // and it participates in real query shapes
+    val viaTable = spark.sql(
+      """SELECT id, dot_product_long(v, v) AS nsq FROM
+        |  (SELECT 1L AS id, array(3L, 4L) AS v)""".stripMargin)
+    assert(viaTable.head.getLong(1) === 25L)
+    // second registered function: the shingle builder
+    val sh = spark.sql(
+      "SELECT distinct_shingles(array('a', 'b', 'c', 'b', 'c'), 2) AS s")
+    assert(sh.head.getSeq[String](0) === Seq("a b", "b c", "c b"))
+    // n is any FOLDABLE integral expression, not just a bare int
+    // literal: casts, arithmetic, and wider integer types all fold
+    for (nExpr <- Seq("CAST(2 AS INT)", "1 + 1", "CAST(2 AS BIGINT)", "CAST(2 AS SMALLINT)")) {
+      val viaFold = spark.sql(
+        s"SELECT distinct_shingles(array('a', 'b', 'c'), $nExpr) AS s")
+      assert(viaFold.head.getSeq[String](0) === Seq("a b", "b c"), nExpr)
     }
+    // bad shapes fail ANALYSIS (position-carrying AnalysisException),
+    // not as a raw runtime error
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT distinct_shingles(array('a'), 'two')").collect()
+    }
+    assert(e.getMessage.contains("foldable integer"), e.getMessage)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT distinct_shingles(array('a'), 0)").collect()
+    }
+    // composed-from-built-ins registrations: determinism primitives
+    // share their single Scala definition with the SQL surface
+    val ho = spark.sql("SELECT hash_order(123) AS h")
+    assert(ho.head.getLong(0) ===
+      ((123L % 2147483647L) * graft.operators.Curation.HashMul) % 4294967296L)
+    val zv = spark.sql("SELECT z_value(3, 5, 3) AS z")
+    assert(zv.head.getLong(0) === 27L) // dimension-major interleave
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT z_value(x, 1) FROM (SELECT 1 AS x)").collect()
+    }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT hash_order(1, 2)").collect()
+    }
+    // isqrt: exact roots incl. the int64 edge (no ANSI overflow)
+    val iq = spark.sql(
+      """SELECT isqrt(0), isqrt(24), isqrt(25), isqrt(26),
+        |       isqrt(9223372036854775807)""".stripMargin).head
+    assert((iq.getLong(0), iq.getLong(1), iq.getLong(2), iq.getLong(3),
+      iq.getLong(4)) === ((0L, 4L, 5L, 5L, 3037000499L)))
+    // matches the Column-API operator on a value table
+    val vals = "SELECT explode(array(0L, 1L, 8L, 9L, 1000000L)) AS n"
+    val viaCol = spark.sql(vals)
+      .select(graft.operators.Curation.isqrt(
+        org.apache.spark.sql.functions.col("n")).as("s"))
+      .collect().map(_.getLong(0)).toSeq
+    val viaSql = spark.sql(s"SELECT isqrt(n) FROM ($vals)")
+      .collect().map(_.getLong(0)).toSeq
+    assert(viaCol === viaSql)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT isqrt(1, 2)").collect()
+    }
+    // unicode_normalize: composition, decomposition, compatibility
+    // (escapes: \u00e1 = precomposed a-acute, \u0301 = combining acute,
+    // \ufb01 = the fi ligature)
+    val un = spark.sql(
+      "SELECT unicode_normalize('a\u0301b', 'NFC') AS c, " +
+        "unicode_normalize('\u00e1b', 'nfd') AS d, " +
+        "unicode_normalize('\ufb01le', 'NFKC') AS k").head
+    assert(un.getString(0) === "\u00e1b")
+    assert(un.getString(1) === "a\u0301b")
+    assert(un.getString(2) === "file")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT unicode_normalize('x', 'NFX')").collect()
+    }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT unicode_normalize('x', form) FROM (SELECT 'NFC' AS form)")
+        .collect()
+    }
+  }
+
+  test("no GraftExtensions function shadows a Spark builtin") {
+    // every session carries the extensions, so a name that is already a
+    // builtin would silently change what existing SQL computes
+    val names = scala.collection.mutable.Buffer.empty[String]
+    new GraftExtensions().apply(new SparkSessionExtensions {
+      override def injectFunction(
+          f: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)): Unit =
+        names += f._1.funcName
+      override def injectTableFunction(
+          f: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)): Unit =
+        names += f._1.funcName
+    })
+    assert(names.nonEmpty)
+    assert(names.distinct.size === names.size, names.mkString(", "))
+    val builtin = names.filter { n =>
+      FunctionRegistry.builtin.functionExists(FunctionIdentifier(n)) ||
+        TableFunctionRegistry.builtin.functionExists(FunctionIdentifier(n))
+    }
+    assert(builtin.isEmpty, s"shadows a builtin: ${builtin.mkString(", ")}")
   }
 
   test("saltedJoin equals the plain join on a skewed corpus") {

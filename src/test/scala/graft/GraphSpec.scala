@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Graph
 
 /** Model tests for the fixed-point PageRank: the distributed update

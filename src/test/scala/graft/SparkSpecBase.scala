@@ -6,21 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local SparkSession for the whole forked test JVM —
   * session startup dominates suite runtime otherwise. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events fixture is TIMESTAMP(NANOS) parquet; see SparkEntry.eventsTable
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Session.builder(4)
+    .appName("graft-tests")
+    .config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    .getOrCreate()
 }
 
 abstract class SparkSpecBase extends AnyFunSuite {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.TextAnalysis
 
 /** Behavioral tests for the text-analysis operators on crafted docs —

@@ -126,7 +126,6 @@ class TokenizeDedupSpec extends SparkSpecBase {
   }
 
   test("cjkNgrams matches a JVM sliding-window model on random text (n=1,2,3)") {
-    import spark.implicits._
     val df = docs
     for (n <- Seq(1, 2, 3)) {
       val got = Tokenize.cjkNgrams("text", n = n)(df)
