@@ -37,9 +37,22 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val probe = args.headOption.getOrElse("bpe_k64")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
+    val run = probes.getOrElse(probe, {
+      System.err.println(s"unknown probe: $probe; valid probes: " +
+        probes.keys.toSeq.sorted.mkString(", "))
+      sys.exit(2)
+    })
     val spark = session()
-    probe match {
-      case "bpe_k64" =>
+    run(spark, sfDir, args)
+    spark.stop()
+  }
+
+  /** A probe body: (session, sfDir, the whole command line). */
+  private type Probe = (SparkSession, String, Array[String]) => Unit
+
+  /** Every probe by name — the one list `main` checks a name against. */
+  private val probes: Map[String, Probe] = Map(
+      "bpe_k64" -> { (spark, sfDir, args) =>
         // batched (maxBatch=16) vs sequential (maxBatch=1) BPE training
         // wall at k=64 on the documents word dict — the driver-loop
         // round count is the variable under test, so the dict is
@@ -59,7 +72,8 @@ object ScaleProbe {
           a == b
         }
         println(f"""{"probe":"bpe_k64","sequential_sec":$seqSec%.2f,"batched_sec":$batSec%.2f,"merges":$seqN,"merges_batched":$batN,"equal":$same}""")
-      case "frontier_wall" =>
+      },
+      "frontier_wall" -> { (spark, sfDir, args) =>
         // per-cell SEARCH wall for emb_ann_frontier's 2×2×2 dial grid
         // (m × nprobe × refine) — the axis the hash-matched battery
         // row cannot carry (wall time is host-dependent). Together
@@ -87,7 +101,8 @@ object ScaleProbe {
             f""""sec":$sec%.2f,"rows":$n}"""
         }
         println(s"""{"probe":"frontier_wall","cells":[${cells.mkString(",")}]}""")
-      case "bpe_k1024" =>
+      },
+      "bpe_k1024" -> { (spark, sfDir, args) =>
         // the real-vocabulary wall: k=1024 merges, incremental count
         // maintenance vs full per-round recount (both batched at the
         // default 16). The plain documents dict EXHAUSTS at 89 merges
@@ -114,7 +129,8 @@ object ScaleProbe {
         val (fullSec, fullRows) = once(inc = false)
         val (incSec, incRows) = once(inc = true)
         println(f"""{"probe":"bpe_k1024","k":$kProbe,"dict_words":${dict.count()},"full_recount_sec":$fullSec%.2f,"incremental_sec":$incSec%.2f,"merges":${fullRows.size},"merges_inc":${incRows.size},"equal":${fullRows == incRows}}""")
-      case "bpe_crossover" =>
+      },
+      "bpe_crossover" -> { (spark, sfDir, args) =>
         // the incremental-vs-recount CROSSOVER table: where does the
         // maintained-counts dial start winning, by k and dict size?
         // The high end is already measured (r14 bpe_k1024 probe:
@@ -154,8 +170,8 @@ object ScaleProbe {
           graft.core.IterCheckpoint.release(dict)
         }
         println(s"""{"probe":"bpe_crossover","cells":[${cells.mkString(",")}]}""")
-
-      case "phash_twin_ham" =>
+      },
+      "phash_twin_ham" -> { (spark, sfDir, args) =>
         // dual-grid Hamming distance of every PLANTED re-encode twin
         // to its origin under the scaled 256-bit signature — the
         // evidence behind the recall-dial cutoffs (which twins sit
@@ -185,7 +201,8 @@ object ScaleProbe {
         val cells = rows.map(r =>
           s"""{"doc_id":${r.getLong(0)},"ham_primary":${r.get(1)},"ham_midpoint":${r.get(2)}}""")
         println(s"""{"probe":"phash_twin_ham","twins":[${cells.mkString(",")}]}""")
-      case "er_join_hint" =>
+      },
+      "er_join_hint" -> { (spark, sfDir, args) =>
         // third lever on the er_link_dirty2 100x wall: the candidate
         // equijoin's ALGORITHM. merge (the default; fully spillable)
         // vs shuffle_hash (per-task hash build over narrow (key, id)
@@ -217,8 +234,8 @@ object ScaleProbe {
         }
         val parts = spark.conf.get("spark.sql.shuffle.partitions")
         println(s"""{"probe":"er_join_hint","sf":"$dir2","scale":${scale.getOrElse(1)},"partitions":$parts,${results.map(_._2).mkString(",")}}""")
-
-      case "q18_soak" =>
+      },
+      "q18_soak" -> { (spark, sfDir, args) =>
         // the agg-feeds-join 100× trap, executed at scale: q18 on the
         // N×-replicated corpus with size-based broadcasting OFF (at
         // 100 TB nothing fits in a broadcast), asserting the EXECUTED
@@ -253,11 +270,5 @@ object ScaleProbe {
               s"$shuffleJoins/$broadcastJoins:\n${p.take(3000)}")
           spark.stop(); sys.exit(1)
         }
-
-      case other =>
-        System.err.println(s"unknown probe: $other")
-        sys.exit(2)
-    }
-    spark.stop()
-  }
+      })
 }

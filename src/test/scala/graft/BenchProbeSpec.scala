@@ -1,10 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** The host-calibration probe and the drift-baseline history parsing —
-  * pure-JVM units of [[Bench]] (no Spark session needed). */
-class BenchProbeSpec extends AnyFunSuite {
+/** [[Bench]]'s measurement pieces: the host-calibration probe (pure
+  * JVM) and the job-group meter that splits each query's Spark work. */
+class BenchProbeSpec extends SparkSpecBase {
 
   test("mixChecksum is deterministic fixed work, sensitive to seed and iters") {
     val a = Bench.HostProbe.mixChecksum(42L, 100000L)
@@ -22,187 +20,43 @@ class BenchProbeSpec extends AnyFunSuite {
     assert(chk1 === chk2)
   }
 
-  private def withHistory(lines: Seq[String])(body: String => Unit): Unit = {
-    val p = java.nio.file.Files.createTempFile("bench_hist", ".jsonl")
+  test("GroupMeter counts each tagged query's own jobs, stages and tasks") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val meter = new Bench.GroupMeter(sc)
     try {
-      java.nio.file.Files.writeString(p, lines.mkString("", "\n", "\n"))
-      body(p.toString)
-    } finally java.nio.file.Files.deleteIfExists(p)
-  }
-
-  private def rec(sf: String, q: String, sec: Double, ok: Boolean,
-      probeMt: Option[Double] = None): String = {
-    val probe = probeMt
-      .map(v => s""","probe":{"pre_1t":0.2,"pre_mt":$v,"post_1t":0.2,"post_mt":$v,"threads":32,"iters":1,"chk":"0","host_ratio":1.000}""")
-      .getOrElse("")
-    s"""{"metric":"total_ok","value":$sec,"queries":{"$q":{"sec":$sec,"ok":$ok}},"sf":"$sf"$probe}"""
-  }
-
-  test("priorSecs: min over matching-sf ok entries; failures and other sf excluded") {
-    withHistory(Seq(
-      rec("/d/sf1", "q1", 9.0, ok = true),   // wrong sf — out
-      rec("/d/sf0.1", "q1", 2.0, ok = true),
-      rec("/d/sf0.1", "q1", 1.5, ok = true),
-      rec("/d/sf0.1", "q1", 0.1, ok = false) // failed — out
-    )) { path =>
-      assert(Bench.priorSecs("/d/sf0.1", path) === Map("q1" -> 1.5))
-      assert(Bench.priorSecs("/d/sf9", path) === Map.empty)
-    }
-  }
-
-  test("priorProbeMt: MEDIAN pre_mt over the same matching-sf records; None when absent") {
-    withHistory(Seq(
-      rec("/d/sf1", "q1", 9.0, ok = true, probeMt = Some(0.1)), // wrong sf
-      rec("/d/sf0.1", "q1", 2.0, ok = true),                    // probe-less era
-      rec("/d/sf0.1", "q1", 1.5, ok = true, probeMt = Some(0.42)),
-      rec("/d/sf0.1", "q1", 1.6, ok = true, probeMt = Some(0.37))
-    )) { path =>
-      // median, not min (r14 advice: a min denominator turns ordinary
-      // probe jitter into a permanently loosened drift trigger) —
-      // even count takes the upper median: sorted [0.37, 0.42] → 0.42
-      assert(Bench.priorProbeMt("/d/sf0.1", path) === Some(0.42))
-      // no probe anywhere in matching records → None → host-ratio 1
-      withHistory(Seq(rec("/d/sf0.1", "q1", 2.0, ok = true))) { p2 =>
-        assert(Bench.priorProbeMt("/d/sf0.1", p2) === None)
+      val narrow = spark.range(0, 1000, 1, 3).select(($"id" * 2).as("x"))
+      val grouped = spark.range(0, 1000, 1, 3)
+        .groupBy(($"id" % 7).as("k")).count()
+      meter.tagged("narrow")(Bench.materialize(narrow))
+      meter.tagged("shuffle") {
+        Bench.materialize(grouped.repartition(2))
       }
-    }
-  }
-
-  test("priorProbeMt reads only the HistoryDepth most recent matching records") {
-    val lines = (1 to Bench.HistoryDepth + 2).map { i =>
-      rec("/d/sf0.1", "q1", i.toDouble, ok = true, probeMt = Some(i.toDouble))
-    }
-    withHistory(lines) { path =>
-      // probes 1.0 and 2.0 fell off the takeRight(HistoryDepth) window;
-      // median of the surviving [3,4,5] is 4
-      assert(Bench.priorProbeMt("/d/sf0.1", path) === Some(4.0))
-    }
-  }
-
-  test("host-ratio noise floor: sub-1.15 jitter must not loosen the trigger") {
-    // the floor is applied in main()'s hostRatio; assert the constant
-    // here so a silent removal fails a test, and pin the arithmetic
-    // the floor exists for: 0.68/0.62 ≈ 1.10 < floor → ratio stays 1
-    assert(Bench.HostRatioFloor === 1.15)
-    assert(0.68 / 0.62 < Bench.HostRatioFloor)
-  }
-
-  test("clampRatio: floor, passthrough, clamp, and the no-probe default") {
-    val h = Some(0.5)
-    assert(Bench.clampRatio(0.55, h) === 1.0)        // 1.10 < floor → 1
-    assert(Bench.clampRatio(0.75, h) === 1.5)        // genuine drift
-    assert(Bench.clampRatio(9.0, h) === 3.0)         // pathological → clamp
-    assert(Bench.clampRatio(0.75, None) === 1.0)     // probe-less history
-  }
-
-  test("RetryGate: baseline queries use the drift trigger, new queries the absolute one") {
-    val prior = Map("slow_known" -> 8.0, "fast_known" -> 0.4)
-    val gate = new Bench.RetryGate(prior, Some(0.5), preRatio = 1.0)
-    // 8.5 s but within 1.5× of its committed 8.0 s baseline: matching
-    // your own history is not a contention signal — no retry (the r15
-    // record re-ran 33 legitimately-slow queries under the old
-    // unconditional RetrySec rule)
-    assert(!gate.shouldRetry("slow_known", 8.5))
-    // 3× its 0.4 s baseline → drift trigger fires even under RetrySec
-    assert(gate.shouldRetry("fast_known", 1.2))
-    // no baseline → absolute threshold governs
-    assert(gate.shouldRetry("brand_new", 2.5))
-    assert(!gate.shouldRetry("brand_new2", 1.9))
-  }
-
-  test("RetryGate: clustered triggers re-probe and a degraded host de-flags the cluster") {
-    // 20 queries, all with a 1.0 s committed baseline, all measured at
-    // 1.6 s — a uniform +60% is the signature of a host slowdown, not
-    // of 20 independent contention windows. Pre-probe was healthy
-    // (ratio 1.0); the mid-run probe reads 0.75 vs the 0.5 history
-    // median → ratio 1.5 → trigger loosens to 1.5·1.5 = 2.25× → the
-    // cluster de-flags after ReprobeAfter firings instead of 20
-    // futile retries (the r15 80-query storm, bounded).
-    var probes = 0
-    val prior = (1 to 20).map(i => f"q$i%02d" -> 1.0).toMap
-    val gate = new Bench.RetryGate(prior, Some(0.5), preRatio = 1.0,
-      reprobeAfter = 5, probeMt = () => { probes += 1; 0.75 })
-    val flagged = (1 to 20).map(i => f"q$i%02d").filter(gate.shouldRetry(_, 1.6))
-    assert(flagged.size === 4)   // the 5th firing re-probed and de-flagged
-    assert(probes === 1)         // one re-probe settled the whole cluster
-    assert(gate.ratio === 1.5)
-    assert(gate.reprobeMts.toSeq === Seq(0.75))
-  }
-
-  test("RetryGate: consecutive counter resets on a non-trigger; recovery re-tightens") {
-    var reading = 0.75 // degraded
-    val prior = (1 to 30).map(i => f"q$i%02d" -> 1.0).toMap
-    val gate = new Bench.RetryGate(prior, Some(0.5), preRatio = 1.0,
-      reprobeAfter = 3, probeMt = () => reading)
-    // two triggers, then a clean query: the counter must reset — no probe
-    assert(gate.shouldRetry("q01", 1.6) && gate.shouldRetry("q02", 1.6))
-    assert(!gate.shouldRetry("q03", 1.1))
-    assert(gate.reprobeMts.isEmpty)
-    // three consecutive → probe → ratio 1.5 → 1.6 s de-flags
-    assert(gate.shouldRetry("q04", 1.6) && gate.shouldRetry("q05", 1.6))
-    assert(!gate.shouldRetry("q06", 1.6))
-    assert(gate.ratio === 1.5)
-    // host recovers; the NEXT cluster (2.0 s > 2.25 still under... use
-    // 2.4 s > 2.25 to fire) re-probes, reads healthy, and the gate
-    // re-tightens to the pre-drift trigger instead of max-ratcheting
-    reading = 0.5
-    assert(gate.shouldRetry("q07", 2.4) && gate.shouldRetry("q08", 2.4))
-    assert(gate.shouldRetry("q09", 2.4)) // probe fired; 2.4 > 1.5·1.0·1.0 still triggers
-    assert(gate.ratio === 1.0)
-    assert(gate.reprobeMts.toSeq === Seq(0.75, 0.5))
-  }
-
-  test("RetryGate: the retry budget denies triggered retries once spent, and counts them") {
-    // 10 poisoned priors (recorded in a different contention window):
-    // every query fires the 1.5×-prior trigger on ordinary variance.
-    // With a 3 s budget and each retry costing 2 s, the pass affords
-    // two retries (the second crosses the line mid-flight — bounded
-    // overshoot, not a hard mid-query stop); the remaining 8 triggers
-    // are denied and COUNTED, not silently dropped.
-    val prior = (1 to 10).map(i => f"q$i%02d" -> 1.0).toMap
-    val gate = new Bench.RetryGate(prior, Some(0.5), preRatio = 1.0,
-      reprobeAfter = 100, budgetSec = 3.0)
-    var granted = 0
-    for (i <- 1 to 10) {
-      if (gate.shouldRetry(f"q$i%02d", 1.6)) { granted += 1; gate.charge(2.0) }
-    }
-    assert(granted === 2)
-    assert(gate.budgetDenied === 8)
-    assert(gate.spentSec === 4.0)
-    // the denied retries are NAMED, not just counted (r17 verdict item
-    // 2): the committed record must say which queries kept first-pass
-    // times so a driver total inflated only there adjudicates itself
-    assert(gate.deniedQueries.toSeq === (3 to 10).map(i => f"q$i%02d"))
-  }
-
-  test("RetryGate: mid-run probe wall charges the same budget") {
-    // the re-probe is retry-pass wall too: with a budget smaller than
-    // nothing-at-all, the probe's cost still lands in spentSec so the
-    // accounting in the record (retry_sec vs budget) stays one number
-    val prior = (1 to 6).map(i => f"q$i%02d" -> 1.0).toMap
-    val gate = new Bench.RetryGate(prior, Some(0.5), preRatio = 1.0,
-      reprobeAfter = 2, probeMt = () => 0.5, budgetSec = 100.0)
-    assert(gate.shouldRetry("q01", 1.6))
-    gate.shouldRetry("q02", 1.6) // 2nd consecutive → probes (healthy → stays flagged)
-    assert(gate.reprobeMts.size === 1)
-    assert(gate.spentSec === gate.reprobeSec)
-    assert(gate.spentSec > 0.0)
-  }
-
-  test("RetryGate: an unlimited budget preserves the r15/r16 gate behavior") {
-    val prior = Map("q" -> 1.0)
-    val gate = new Bench.RetryGate(prior, Some(0.5), preRatio = 1.0)
-    assert(gate.shouldRetry("q", 1.6))
-    assert(gate.budgetDenied === 0)
-  }
-
-  test("priorSecs still parses records that carry the attempts field") {
-    // r16 records append "attempts" AFTER "ok" — the history regex
-    // anchors on `"sec":X,"ok":true` and must keep matching both eras
-    withHistory(Seq(
-      s"""{"metric":"total_ok","value":1.5,"queries":{"q1":{"sec":1.5,"ok":true,"attempts":3},"q2":{"sec":0.2,"ok":false,"attempts":1}},"sf":"/d/sf0.1"}"""
-    )) { path =>
-      assert(Bench.priorSecs("/d/sf0.1", path) === Map("q1" -> 1.5))
-    }
+      // a pool created inside the build, like emb_ann_frontier's: its
+      // threads inherit the group, so their jobs count to this query
+      meter.tagged("pooled") {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+        try {
+          val fs = (1 to 2).map(i => pool.submit(() =>
+            Bench.materialize(spark.range(0, 100L * i, 1, 2).toDF())))
+          fs.foreach(_.get())
+        } finally pool.shutdown()
+      }
+      // untagged work is nobody's
+      Bench.materialize(spark.range(10).toDF())
+      val counts = meter.settle()
+      // no exchange: one job, one stage of three tasks
+      assert(counts("narrow").jobs === 1)
+      assert(counts("narrow").stages === 1)
+      assert(counts("narrow").tasks === 3)
+      // the shuffles add map stages: more stages than the narrow query
+      assert(counts("shuffle").jobs >= 1)
+      assert(counts("shuffle").stages > counts("narrow").stages)
+      assert(counts("shuffle").tasks > counts("narrow").tasks)
+      assert(counts("shuffle").taskMs >= 0L)
+      assert(counts("pooled").jobs === 2)
+      assert(counts("pooled").stages === 2)
+      assert(counts("pooled").tasks === 4)
+    } finally sc.removeSparkListener(meter)
   }
 }
