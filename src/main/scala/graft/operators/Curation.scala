@@ -49,8 +49,8 @@ object Curation {
     *
     * Shape: distinct shingles per doc (one compiled pass,
     * [[NearDup.shingles]]) → the benchmark side is deduped to a distinct
-    * gram set and broadcast (an eval benchmark is small by definition —
-    * disable via `broadcastBenchmark=false` if it is not) → equijoin on
+    * gram set and broadcast (an eval benchmark is small by definition;
+    * [[contaminationBloom]] is the shape for one that is not) → equijoin on
     * the gram string → one hash-agg per contaminated doc. The corpus
     * side never shuffles when the benchmark broadcasts; join output is
     * ∝ true contamination, because grams are distinct on BOTH sides.
@@ -61,14 +61,12 @@ object Curation {
       n: Int = ContaminationN,
       idCol: String = "doc_id",
       textCol: String = "text",
-      broadcastBenchmark: Boolean = true,
       materializeGrams: Boolean = false): DataFrame = {
     val grams = contaminationGrams(docs, isBenchmark, n, idCol, textCol,
       materializeGrams)
     val bench = grams.filter(col("__bench")).select(col("s")).distinct()
-    val benchSide = if (broadcastBenchmark) broadcast(bench) else bench
     grams.filter(!col("__bench"))
-      .join(benchSide, "s")
+      .join(broadcast(bench), "s")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shared_grams"))
   }

@@ -286,46 +286,25 @@ object Er {
       left: DataFrame, leftId: String, leftName: String,
       right: DataFrame, rightId: String, rightName: String,
       maxEdit: Int = 1,
-      maxKeyFreq: Option[Long] = None,
-      joinHint: String = "merge"): DataFrame = {
+      maxKeyFreq: Option[Long] = None): DataFrame = {
     require(maxEdit >= 0 && maxEdit <= 2,
       s"deletion blocking implemented to depth 2 (maxEdit <= 2), got $maxEdit")
     val l = keyed(left, leftId, leftName, maxKeyFreq, maxEdit)
       .select(col("__key"), col("__id").as("left_id"))
     val r = keyed(right, rightId, rightName, maxKeyFreq, maxEdit)
       .select(col("__key"), col("__id").as("right_id"))
-    // sort-merge BY DEFAULT for the same post-explode underestimation
-    // reason as candidatePairs (both sides are inline key explodes
-    // here; the parquet-backed streaming path — fuzzyPairsFromKeys —
-    // keeps Spark's choice, its store stats are real file sizes);
-    // narrow (key, id) rows through the big sort, names joined back
-    // onto the distinct pair frame — see rawCandidates.
-    //
-    // `joinHint` exists because the join ALGORITHM was the third
-    // measured lever on the 100× er_link_dirty2 wall — and it is the
-    // THIRD NULL RESULT (r15, ScaleProbe "er_join_hint"; bloom prune
-    // and hashed keys are the first two, documented above/at the
-    // sibling). The hypothesis: after the r12 narrow-key layout cut
-    // the sorted row to (key, id), a shuffle_hash build might be
-    // ~volume/partitions narrow rows per task — no longer the 10× OOM
-    // shape measured on the pre-narrow layout. MEASURED: at 1×
-    // (sf0.1, 32 partitions) shuffle_hash wins 5.63 vs 7.01 s (0.80×)
-    // at identical 1,367,813-row output — real but irrelevant at that
-    // scale. At the committed 100× spot scale (sf0.01×100, 32
-    // partitions): merge 23.2 s (6.79 M links), shuffle_hash →
-    // SparkOutOfMemoryError in buildHashedRelation. At sf0.1×100 it
-    // OOMs at 32 partitions AND at 256 (static partition sizing is
-    // defeated by AQE coalescing: the narrow key shuffle compresses
-    // small, so AQE merges the 256 back into few giant build
-    // partitions). Rescuing the hint means re-tuning AQE's advisory
-    // size session-wide for one join — not a lever, a liability. The
-    // wall is hereby characterized: merge is the floor for this
-    // contract (fully spillable, survives any key-table size); the
-    // dial stays for executor-rich deployments that can afford the
-    // build memory at THEIR volume/partitions ratio (ErSpec pins
-    // output equality and that the hint actually takes).
+    // sort-merge for the same post-explode underestimation reason as
+    // candidatePairs (both sides are inline key explodes here; the
+    // parquet-backed streaming path, fuzzyPairsFromKeys, keeps Spark's
+    // choice, its store stats being real file sizes); narrow (key, id)
+    // rows through the big sort, names joined back onto the distinct
+    // pair frame (see rawCandidates). Merge is the only algorithm because
+    // it is fully spillable: shuffle_hash was measured (r15) and ran out
+    // of memory building its hash relation at the 100× soak scale, at 32
+    // partitions and at 256 (AQE coalesces the narrow key shuffle back
+    // into few large build partitions).
     confirmJoinedBack(
-      l.join(r.hint(joinHint), Seq("__key"))
+      l.join(r.hint("merge"), Seq("__key"))
         .select(col("left_id"), col("right_id")).distinct(),
       nameSide(left, leftId, leftName, "left_id", "__nl"),
       nameSide(right, rightId, rightName, "right_id", "__nr"),

@@ -27,7 +27,7 @@ object TextAnalysis {
     * load a bigger lexicon through the same join.
     *
     * Widened in r17, driven by the real-text measurement
-    * ([[graft.LangIdAnchor]] → LANGID_REAL.json): the original
+    * (`graft.dev.Measure langid_real` → LANGID_REAL.json): the original
     * 5-language lexicon had no fi/pt rows at all, and the shared
     * Romance stopwords ("de", "la", "que", "un") voted only for the
     * single language that happened to list them — so real French prose

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
@@ -83,7 +84,8 @@ object Streams {
     *
     * Column contract: both inputs expose `keys` and `tsCol`; the right
     * side's non-key columns must not collide with the left's (rename
-    * before calling).
+    * before calling). A left `tsCol` that already carries a watermark
+    * (a chained join's previous right-side ts) keeps it.
     */
   def intervalJoin(
       left: DataFrame,
@@ -92,12 +94,13 @@ object Streams {
       horizon: String,
       tsCol: String = "ts",
       rightTsCol: String = "rts",
-      lateness: String = "2 hours",
-      leftWatermarked: Boolean = false): DataFrame = {
+      lateness: String = "2 hours"): DataFrame = {
     // chaining joins: a column that already carries a watermark (e.g.
     // the previous stage's right-side ts) must NOT be re-watermarked —
     // Spark rejects watermark redefinition outright
-    val l = if (leftWatermarked) left else left.withWatermark(tsCol, lateness)
+    val l =
+      if (left.schema(tsCol).metadata.contains(EventTimeWatermark.delayKey)) left
+      else left.withWatermark(tsCol, lateness)
     val r = right.withColumnRenamed(tsCol, rightTsCol)
       .withWatermark(rightTsCol, lateness)
     val keyEq = keys.map(k => l(k) === r(k)).reduce(_ && _)

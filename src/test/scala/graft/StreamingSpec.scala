@@ -427,7 +427,8 @@ class StreamingSpec extends SparkSpecBase {
       clicks.toDF().toDF("ts", "user_id", "cid"),
       keys = Seq("user_id"), horizon = "30 minutes")
     // stage 2 joins on the CLICK's event time: rts (the click ts) is
-    // already watermarked from stage 1's right side
+    // already watermarked from stage 1's right side, and intervalJoin
+    // keeps that watermark instead of redefining it
     // demote the purchase ts to a plain value column (a stream may
     // carry at most ONE event-time column into the next stateful op) —
     // the unix↔timestamp round trip drops the event-time metadata
@@ -438,8 +439,7 @@ class StreamingSpec extends SparkSpecBase {
     val stage2 = Streams.intervalJoin(
       clickTimed,
       views.toDF().toDF("ts", "user_id", "vid"),
-      keys = Seq("user_id"), horizon = "30 minutes",
-      leftWatermarked = true) // the click ts carries stage 1's watermark
+      keys = Seq("user_id"), horizon = "30 minutes")
     val q = stage2
       .writeStream.format("memory").queryName("funnel").outputMode("append")
       .start()
